@@ -391,7 +391,7 @@ def sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = scratch(sf_dir, "sink_roundtrip")
     li = load(spark, sf_dir, "lineitem").filter(F.col("l_quantity") > 25.0)
     li.write.mode("overwrite").option("compression", "zstd").parquet(path)
-    back = spark.read.parquet(path)
+    back = spark.read.schema(li.schema).parquet(path)
     return back.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n_rows"), dsum("l_extendedprice").alias("sum_price")
     )
@@ -553,8 +553,9 @@ def sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     prepare(spark)
     path = scratch(sf_dir, "sink_zorder")
-    zorder_write(load(spark, sf_dir, "lineitem"), path, "l_partkey", "l_suppkey")
-    back = spark.read.parquet(path)
+    li = load(spark, sf_dir, "lineitem")
+    zorder_write(li, path, "l_partkey", "l_suppkey")
+    back = spark.read.schema(li.schema).parquet(path)
     return back.filter(
         F.col("l_partkey").between(Z_PART_LO, Z_PART_HI)
         & F.col("l_suppkey").between(Z_SUPP_LO, Z_SUPP_HI)
@@ -774,10 +775,9 @@ def sink_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("NEW").alias("c_mktsegment"),
     )
     path = scratch(sf_dir, "sink_upsert_changes")
-    updates.unionByName(deletes).unionByName(inserts).write.mode("overwrite").parquet(
-        path
-    )
-    ch = spark.read.parquet(path)
+    changes = updates.unionByName(deletes).unionByName(inserts)
+    changes.write.mode("overwrite").parquet(path)
+    ch = spark.read.schema(changes.schema).parquet(path)
     return (
         base.join(ch, base.c_custkey == ch.k, "full_outer")
         .filter(F.coalesce(F.col("op"), F.lit("")) != "D")
@@ -819,8 +819,9 @@ def sink_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     compacted = scratch(sf_dir, "sink_compact_out")
     docs = load(spark, sf_dir, "documents")
     docs.repartition(64).write.mode("overwrite").parquet(frag)
-    spark.read.parquet(frag).repartition(4).write.mode("overwrite").parquet(compacted)
-    back = spark.read.parquet(compacted)
+    read = spark.read.schema(docs.schema)
+    read.parquet(frag).repartition(4).write.mode("overwrite").parquet(compacted)
+    back = read.parquet(compacted)
     return back.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.length("text")).alias("total_chars"),

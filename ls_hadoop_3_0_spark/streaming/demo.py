@@ -20,7 +20,8 @@ from pyspark.sql import functions as F
 
 from ls_hadoop_3_0_spark.exprs import dsum
 from ls_hadoop_3_0_spark.session import prepare
-from ls_hadoop_3_0_spark.tables import load
+from ls_hadoop_3_0_spark.sources.io import scratch
+from ls_hadoop_3_0_spark.tables import load, parquet_rows, parquet_schema
 
 #: Schema for tests that synthesize their own int64-NANOS event files
 #: (the watermark/changelog tests write raw nanos and truncate to µs
@@ -38,8 +39,9 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     The file source wants a *directory* (new files appearing = new
     micro-batches); the single fixture file is staged into a scratch dir.
 
-    The stream schema is taken from a batch read of the staged file — the
-    same arrival types ``tables.load`` sees — and ``ts`` is normalized
+    The stream schema is the staged file's inferred schema
+    (``tables.parquet_schema`` — the same arrival types ``tables.load``
+    sees, and no Spark job once cached), and ``ts`` is normalized
     exactly like the batch path: converted from int64 nanos only when it
     actually arrives as long (under ``nanosAsLong`` with a NANOS fixture),
     passed through untouched when the fixture already stores µs
@@ -58,8 +60,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # — the file source can read it in place, no staging needed.
         stage = src
     else:
-        tag = os.path.basename(os.path.normpath(sf_dir))
-        stage = f"/root/repo/.scratch/{tag}/stream_events_src"
+        stage = scratch(sf_dir, "stream_events_src")
         os.makedirs(stage, exist_ok=True)
         dst = f"{stage}/events.parquet"
         # Re-stage whenever the source fixture changed (driver
@@ -74,7 +75,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             or os.path.getmtime(dst) != st.st_mtime
         ):
             shutil.copy2(src, dst)
-    arrival = spark.read.parquet(stage).schema
+    arrival = parquet_schema(spark, stage)
     raw = spark.readStream.schema(arrival).format("parquet").load(stage)
     if isinstance(arrival["ts"].dataType, T.LongType):
         raw = raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
@@ -818,29 +819,9 @@ def staged_rows(*paths: str) -> int:
     """Total rows under the staged stream-source path(s), read from
     parquet FOOTERS (no scan; compression-independent — a replicated
     corpus compresses ~100× and byte counts under-size it, the r17
-    100× lesson). Non-parquet/metadata files are ignored."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    def _file_rows(p: str) -> int:
-        try:
-            return pq.read_metadata(p).num_rows
-        except Exception:
-            return 0
-
-    total = 0
-    for p in paths:
-        if os.path.isdir(p):
-            for root, _, files in os.walk(p):
-                total += sum(
-                    _file_rows(os.path.join(root, f))
-                    for f in files
-                    if f.endswith(".parquet") and not f.startswith(("_", "."))
-                )
-        elif os.path.exists(p):
-            total += _file_rows(p)
-    return total
+    100× lesson). An unreadable footer is logged and skipped
+    (``tables.parquet_rows``)."""
+    return sum(parquet_rows(p) or 0 for p in paths)
 
 
 def stream_shuffle_partitions(
@@ -956,7 +937,7 @@ def changelog_upsert_stream(events: DataFrame, state_path: str):
             .drop("rn")
         )
         try:
-            base = spark.read.parquet(state_path)
+            base = spark.read.schema(latest.schema).parquet(state_path)
         except Exception:
             base = None
         if base is not None:

@@ -43,6 +43,7 @@ def query(key, oracle=None, *, streaming_runtime=True):
     measures these in an exclusive second pass (VERDICT r14 #6)."""
     return _registry_query(key, oracle, streaming_runtime=streaming_runtime)
 from ls_hadoop_3_0_spark.session import prepare
+from ls_hadoop_3_0_spark.sources.io import scratch
 from ls_hadoop_3_0_spark.streaming import batch_equiv, demo
 from ls_hadoop_3_0_spark.tables import EVENTS_SQL
 
@@ -350,10 +351,9 @@ def stream_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     ev = demo.read_events_stream(spark, sf_dir)
-    tag = os.path.basename(os.path.normpath(sf_dir))
     st = os.stat(f"{sf_dir}/events.parquet")
     ver = f"{st.st_size}_{int(st.st_mtime)}"
-    base = f"/root/repo/.scratch/{tag}/stream_sink_parquet_{ver}"
+    base = scratch(sf_dir, f"stream_sink_parquet_{ver}")
     out_dir = f"{base}/out"
     ckpt = f"{base}/ckpt"
 
@@ -363,12 +363,12 @@ def stream_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     # On a FRESH checkpoint the adaptive count pins the state-store
     # partitions; an existing checkpoint keeps its recorded count (the
     # exactly-once replay contract) and this is a no-op.
+    counts = demo.tumbling_counts_stream(ev)
     with demo.shuffle_partitions(
         spark, demo.events_stream_partitions(spark, sf_dir)
     ):
         q = (
-            demo.tumbling_counts_stream(ev)
-            .writeStream.foreachBatch(write_batch)
+            counts.writeStream.foreachBatch(write_batch)
             .outputMode("complete")
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
@@ -376,7 +376,7 @@ def stream_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination(120)
         q.stop()
-    written = spark.read.parquet(out_dir)
+    written = spark.read.schema(counts.schema).parquet(out_dir)
     return _tumbling_digest(written).select(
         "n_windows", "n_events", "windows_md5"
     )
@@ -836,17 +836,15 @@ def stream_batch_equiv_stateful_et(
     stateful family's associative integer sums; ``matches_batch`` is the
     real in-session comparison against the batch groupBy twin.
     """
-    import os
     import shutil
     import time
 
     prepare(spark)
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "default"
     # Per-run uuid: a fresh dir per invocation gives the r10
     # checkpoint-resets-with-data rule for free AND makes concurrent
     # sessions (e.g. bench racing a test run) collision-proof; removed
     # after the stream stops (the memory sink holds the rows).
-    base = f"/root/repo/.scratch/{tag}/stream_et_{uuid.uuid4().hex[:12]}"
+    base = scratch(sf_dir, f"stream_et_{uuid.uuid4().hex[:12]}")
     shutil.rmtree(base, ignore_errors=True)
     data_dir, chk = f"{base}/data", f"{base}/chk"
 
@@ -1031,13 +1029,11 @@ def stream_batch_equiv_session_et(
     time over the retained raw events, so batch boundaries cannot
     change WHAT is emitted, only when.
     """
-    import os
     import shutil
     import time
 
     prepare(spark)
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "default"
-    base = f"/root/repo/.scratch/{tag}/stream_sess_et_{uuid.uuid4().hex[:12]}"
+    base = scratch(sf_dir, f"stream_sess_et_{uuid.uuid4().hex[:12]}")
     shutil.rmtree(base, ignore_errors=True)
     data_dir, chk = f"{base}/data", f"{base}/chk"
 
@@ -1729,8 +1725,7 @@ def stream_python_datasink(spark: SparkSession, sf_dir: str) -> DataFrame:
         WriterCommitMessage,
     )
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "default"
-    path = f"/root/repo/.scratch/{tag}/stream_python_datasink"
+    path = scratch(sf_dir, "stream_python_datasink")
     shutil.rmtree(path, ignore_errors=True)
     # The checkpoint must reset WITH the data dir: a stale offset log
     # makes availableNow a no-op and the manifest would stay empty.
@@ -1963,15 +1958,13 @@ def stream_batch_equiv_interval_join_outer(
     ``matches_batch`` is the real in-session comparison against the
     batch twin.
     """
-    import os
     import shutil
     import time
 
     prepare(spark)
     from ls_hadoop_3_0_spark.operators.sort import _u24_expr
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "default"
-    base = f"/root/repo/.scratch/{tag}/stream_ijo_{uuid.uuid4().hex[:12]}"
+    base = scratch(sf_dir, f"stream_ijo_{uuid.uuid4().hex[:12]}")
     shutil.rmtree(base, ignore_errors=True)
     data_dir, chk = f"{base}/data", f"{base}/chk"
 
@@ -2173,7 +2166,6 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     static relation + O(1) state per doc in the one aggregation —
     exactly what a continuous ingestion tier can pay.
     """
-    import os
     import shutil
 
     prepare(spark)
@@ -2186,8 +2178,7 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ls_hadoop_3_0_spark.tables import load, spread
 
     t_exact, t_bands, _ = incremental_prior_index(spark, sf_dir)
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "default"
-    base = f"/root/repo/.scratch/{tag}/stream_sdi_{uuid.uuid4().hex[:12]}"
+    base = scratch(sf_dir, f"stream_sdi_{uuid.uuid4().hex[:12]}")
     shutil.rmtree(base, ignore_errors=True)
     data_dir, chk = f"{base}/data", f"{base}/chk"
 
@@ -2418,7 +2409,6 @@ def stream_quality_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic, no streaming state at all — strictly cheaper than the
     stateful dedup stream it composes with.
     """
-    import os
     import shutil
 
     prepare(spark)
@@ -2456,8 +2446,7 @@ def stream_quality_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         qw, qt, _ = fut_fit.result()  # FROZEN: prior slice only
         fut_new.result()
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "default"
-    base = f"/root/repo/.scratch/{tag}/stream_sqi_{uuid.uuid4().hex[:12]}"
+    base = scratch(sf_dir, f"stream_sqi_{uuid.uuid4().hex[:12]}")
     shutil.rmtree(base, ignore_errors=True)
     data_dir, chk = f"{base}/data", f"{base}/chk"
 
@@ -2621,7 +2610,6 @@ def stream_knn_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     request rate, and the index is read-only static state — exactly the
     serving economics of a vector store's query tier.
     """
-    import os
     import shutil
 
     import numpy as np
@@ -2635,8 +2623,7 @@ def stream_knn_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = np.asarray(S._ivf_train_np(spark, sf_dir), dtype=np.float64)
     idx_path = S._ivf_index_build(spark, sf_dir, cents)
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "default"
-    base = f"/root/repo/.scratch/{tag}/stream_sks_{uuid.uuid4().hex[:12]}"
+    base = scratch(sf_dir, f"stream_sks_{uuid.uuid4().hex[:12]}")
     shutil.rmtree(base, ignore_errors=True)
     data_dir, chk = f"{base}/data", f"{base}/chk"
 

@@ -1,13 +1,28 @@
 """Fixture loading (TESTDATA.md / FIXTURES.md).
 
 One parquet file per table per scale factor. Schemas are fixed by the
-driver-generated fixtures; we read them as-is (parquet carries the schema —
-no inference involved, satisfying SURVEY.md §1.2 "never rely on inference").
+generated fixtures and read as-is from the parquet footers (SURVEY.md §1.2
+"never rely on inference" of CSV/JSON-style types). Reading a parquet
+footer into a ``StructType`` is still a Spark job, though: a bare
+``spark.read.parquet(path)`` runs one on every call, and at the sub-second
+keys' scale that job was the largest fixed cost of building a query (15 of
+35 jobs per pass of the interactive benchmark). ``parquet_schema`` infers a
+source's schema once per process, keyed by the files' identities and the
+confs that change inference, and ``load`` reads with that schema declared —
+so a warm load starts no job. Query code reads fixtures only through
+``load`` / ``parquet_schema``, and a read-back of a just-written dataset
+declares the writer's schema.
 """
 
 from __future__ import annotations
 
+import logging
+import os
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+log = logging.getLogger(__name__)
 
 TABLES = (
     "region",
@@ -37,10 +52,76 @@ EVENTS_SQL = (
 )
 
 
+#: Confs whose values change what parquet schema inference returns.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+#: (path, inference conf values) -> (file signature, inferred schema). One
+#: entry per path and conf set: a rewritten source replaces its entry.
+#: Threads that miss together both infer and store equal entries.
+_SCHEMAS: dict[tuple[str, tuple], tuple[list, StructType]] = {}
+
+
+def _parquet_files(src_path: str):
+    """The parquet files of a source: the path itself, or every
+    ``*.parquet`` under a directory, skipping the names Spark's file
+    index hides (``.x``, and ``_x`` unless it is a ``_k=v`` partition
+    directory)."""
+
+    def hidden(name: str) -> bool:
+        return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+    if not os.path.isdir(src_path):
+        yield src_path
+        return
+    for root, dirs, files in os.walk(src_path):
+        dirs[:] = sorted(d for d in dirs if not hidden(d))
+        for f in sorted(files):
+            if f.endswith(".parquet") and not hidden(f):
+                yield os.path.join(root, f)
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The ``StructType`` ``spark.read.parquet(path)`` would infer, cached.
+
+    Inference reads footers in a Spark job — 70-80 ms per call on a warm
+    session, for files that have not changed. The cache key is the path,
+    a signature of its files (name, size, ``st_mtime_ns``, inode — a
+    rewrite in place or a new part file changes it) and the values of
+    ``_INFERENCE_CONFS``, so a fixture regenerated with another ``ts``
+    unit, or a session that reads nanos differently, infers afresh. Only
+    the schema is cached: callers build a new relation per read, with
+    its own attribute ids. A path that is not on the local file system,
+    or holds no parquet file, is inferred on every call.
+    """
+    confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+    sig = []
+    try:
+        for p in _parquet_files(path):
+            st = os.stat(p)
+            sig.append((p, st.st_size, st.st_mtime_ns, st.st_ino))
+    except OSError:
+        sig = []
+    hit = _SCHEMAS.get((path, confs))
+    if sig and hit is not None and hit[0] == sig:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    if sig:
+        _SCHEMAS[(path, confs)] = (sig, schema)
+    return schema
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown fixture table: {name}")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    schema = parquet_schema(spark, path)
+    df = spark.read.schema(schema).parquet(path)
     if name == "events":
         from pyspark.sql import functions as F  # local import, cheap
         from pyspark.sql import types as T
@@ -53,7 +134,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # 1.7e18-scale nanos where double math is not. µs fixtures (and
         # our own re-written sinks) arrive as timestamps and pass
         # through untouched.
-        if isinstance(df.schema["ts"].dataType, T.LongType):
+        if isinstance(schema["ts"].dataType, T.LongType):
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return df
 
@@ -99,7 +180,7 @@ def spread(
         n_parts = df.rdd.getNumPartitions()
         need = n_parts < sc.defaultParallelism
         if need and src_path:
-            rows = _parquet_rows(src_path)
+            rows = parquet_rows(src_path)
             if rows is not None:
                 need = rows / max(n_parts, 1) > min_rows_per_split
         if src_path:
@@ -107,45 +188,27 @@ def spread(
     return df.repartition(sc.defaultParallelism) if need else df
 
 
-def _parquet_rows(src_path: str) -> int | None:
-    """Footer row count of a parquet source — single file OR directory.
+def parquet_rows(src_path: str) -> int | None:
+    """Footer row count of a parquet source — single file OR directory
+    (every Spark-written dataset is a directory of part files).
 
-    Every Spark-written dataset is a DIRECTORY of part files; the r9 cut
-    probed it with ``pq.ParquetFile`` (single-file only), so the
-    ``min_rows_per_split`` guard was silently bypassed for the common
-    layout (ADVICE r9, high). Directories resolve by summing the
-    per-fragment footer counts — metadata-only, no data read. When the
-    probe is genuinely impossible (non-parquet, remote FS without a
-    local path) we warn ONCE and return None so the caller falls back to
-    the under-split-only rule VISIBLY instead of silently.
+    Metadata only, no data read. A file whose footer cannot be read is
+    logged and skipped; None when every file was skipped (a remote or
+    non-parquet source), so ``spread`` falls back to its under-split-only
+    rule. Any other error propagates.
     """
-    import os
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    try:
-        import pyarrow.parquet as pq
-
-        if os.path.isdir(src_path):
-            total = 0
-            for root, _dirs, files in os.walk(src_path):
-                for f in files:
-                    if f.endswith(".parquet") and not f.startswith((".", "_")):
-                        total += pq.read_metadata(os.path.join(root, f)).num_rows
-            return total
-        return pq.ParquetFile(src_path).metadata.num_rows
-    except Exception as exc:  # noqa: BLE001 - non-parquet/remote source
-        if src_path not in _PROBE_WARNED:
-            _PROBE_WARNED.add(src_path)
-            import warnings
-
-            warnings.warn(
-                f"spread(): row-count probe failed for {src_path!r} ({exc!r}); "
-                "falling back to the under-split-only rule",
-                stacklevel=3,
-            )
-        return None
-
-
-_PROBE_WARNED: set[str] = set()
+    total, read, skipped = 0, 0, 0
+    for p in _parquet_files(src_path):
+        try:
+            total += pq.read_metadata(p).num_rows
+            read += 1
+        except (OSError, pa.ArrowInvalid) as exc:
+            skipped += 1
+            log.warning("parquet footer unreadable, skipped: %s (%r)", p, exc)
+    return None if skipped and not read else total
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

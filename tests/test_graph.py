@@ -68,24 +68,50 @@ def test_degree_hist_accounts_every_node(spark):
 def test_triangle_rank_pack_guard_fires_on_overflow(spark):
     """VERDICT r16 #7: the (deg << 40 | id) packing guard must fail
     LOUDLY when node ids reach 2^40 or degrees reach 2^23 — and stay
-    silent (NULL) in-bounds, including the empty-graph NULL maxima."""
+    silent (NULL) in-bounds, including the empty-graph NULL bounds."""
     import pytest
 
     from ls_hadoop_3_0_spark.operators.graph import _rank_pack_guard
 
+    schema = "_min_id long, _max_id long, _max_deg long"
     ok = spark.createDataFrame(
-        [((1 << 40) - 1, (1 << 23) - 1)], "_max_id long, _max_deg long"
+        [(0, (1 << 40) - 1, (1 << 23) - 1)], schema
     ).select(_rank_pack_guard().alias("g"))
     assert ok.collect()[0]["g"] is None
 
-    empty = spark.createDataFrame(
-        [(None, None)], "_max_id long, _max_deg long"
-    ).select(_rank_pack_guard().alias("g"))
+    empty = spark.createDataFrame([(None, None, None)], schema).select(
+        _rank_pack_guard().alias("g")
+    )
     assert empty.collect()[0]["g"] is None
 
-    for bad in [(1 << 40, 1), (1, 1 << 23)]:
-        df = spark.createDataFrame(
-            [bad], "_max_id long, _max_deg long"
-        ).select(_rank_pack_guard().alias("g"))
+    for bad in [(0, 1 << 40, 1), (0, 1, 1 << 23)]:
+        df = spark.createDataFrame([bad], schema).select(
+            _rank_pack_guard().alias("g")
+        )
         with pytest.raises(Exception, match="rank overflow"):
             df.collect()
+
+
+def test_triangles_reject_negative_node_ids(spark, tmp_path):
+    """A negative node id borrows from the degree bits of the packed
+    (deg << 40 | id) rank and passes a maxima-only check; the guard's
+    ``_min_id >= 0`` bound must make graph_triangles raise instead."""
+    import pytest
+
+    from ls_hadoop_3_0_spark.operators.graph import graph_triangles
+
+    # suppliers -1, 1, 2 co-supply one order each pair: one triangle.
+    rows = [
+        (oid, 100 + i, s, i + 1, 1.0, 1.0, 0.0, 0.0, "N", "O")
+        for oid, pair in enumerate([(-1, 1), (-1, 2), (1, 2)])
+        for i, s in enumerate(pair)
+    ]
+    d = str(tmp_path / "neg")
+    spark.createDataFrame(
+        rows,
+        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
+        " l_quantity double, l_extendedprice double, l_discount double,"
+        " l_tax double, l_returnflag string, l_linestatus string",
+    ).write.parquet(f"{d}/lineitem.parquet")
+    with pytest.raises(Exception, match="rank overflow"):
+        graph_triangles(spark, d).collect()

@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 
 import ls_hadoop_3_0_spark as engine
-from ls_hadoop_3_0_spark.sources.io import _PYDS_PARTS, _pyds_pushdown_scan
+from ls_hadoop_3_0_spark.sources.io import _PYDS_PARTS, _pyds_pushdown_scan, scratch
 
 from .conftest import SF_DIR
 
@@ -113,8 +113,7 @@ def test_stream_python_datasink_two_phase(spark):
     row = engine.QUERIES["stream_python_datasink"](spark, SF_DIR).collect()[0]
     assert row["matches_manifest"] is True
     assert row["n_rows"] > 0
-    tag = os.path.basename(os.path.normpath(SF_DIR))
-    path = f"/root/repo/.scratch/{tag}/stream_python_datasink"
+    path = scratch(SF_DIR, "stream_python_datasink")
     assert os.path.exists(f"{path}/_MANIFEST.jsonl")
     assert not glob.glob(f"{path}/*.tmp"), "uncommitted task files leaked"
 

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import pytest
 
+from ls_hadoop_3_0_spark.sources.io import scratch
 from ls_hadoop_3_0_spark.streaming import batch_equiv, demo
 
 from .conftest import SF_DIR
@@ -451,7 +452,7 @@ def test_stream_stage_recopies_when_fixture_changes(spark, tmp_path):
 
     write_fixture(10)
     demo.read_events_stream(spark, str(d))
-    staged = "/root/repo/.scratch/restage_sf/stream_events_src/events.parquet"
+    staged = f"{scratch(str(d), 'stream_events_src')}/events.parquet"
     assert os.path.getsize(staged) == os.path.getsize(f"{d}/events.parquet")
 
     write_fixture(25)  # driver regeneration: different size + mtime
